@@ -36,7 +36,7 @@ class OverlapFilter(Filter):
         return not COMP_OP_PY[self.comp_op](o, self.overlap_size)
 
     def _survivor_pairs(self, prep_l, prep_r, ranks) -> DataFrame:
-        from ..joins.core import AUTO_SALT_CAP, apply_salt, build_salt_map
+        from ..joins.core import AUTO_SALT_CAP, build_salt_map, salted_join
 
         ex_l = prep_l.select(F.col("id").alias("l_id"), F.explode("tokens").alias("token"))
         ex_r = prep_r.select(F.col("id").alias("r_id"), F.explode("tokens").alias("token"))
@@ -45,14 +45,8 @@ class OverlapFilter(Filter):
         # rows replicate across all buckets, so each (l_id, r_id,
         # token) triple still meets EXACTLY once — the per-pair
         # overlap count is unchanged (test_filters_salted).
-        ex_l, ex_r, join_keys = apply_salt(
-            ex_l, ex_r, build_salt_map(ranks, AUTO_SALT_CAP)
-        )
-        n_part = int(prep_l.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        ex_l = ex_l.repartition(n_part, *join_keys)
-        ex_r = ex_r.repartition(n_part, *join_keys)
         counted = (
-            ex_l.join(ex_r, join_keys)
+            salted_join(ex_l, ex_r, build_salt_map(ranks, AUTO_SALT_CAP))
             .groupBy("l_id", "r_id")
             .agg(F.count("*").alias("_overlap"))
         )

@@ -52,7 +52,7 @@ class PrefixFilter(Filter):
         return len(lp & rp) == 0
 
     def _survivor_pairs(self, prep_l, prep_r, ranks) -> DataFrame:
-        from ..joins.core import AUTO_SALT_CAP, apply_salt, build_salt_map
+        from ..joins.core import AUTO_SALT_CAP, blocked_candidates, build_salt_map
 
         # id_col='id': filter table mode hands survivor ids straight
         # to its output without a prep join, so it stays in
@@ -62,17 +62,10 @@ class PrefixFilter(Filter):
         ex_r = prefix_explode(prep_r, "r", self.sim_measure_type, self.threshold,
                               id_col="id")
         # mandatory hot-token salt, same defense as candidate_pairs:
-        # one ubiquitous prefix token otherwise serializes the stage.
-        # Each surviving (l,r) still meets at least once (l's salt
-        # bucket), and distinct() collapses multiplicity — survivor
-        # set identical to the unsalted join (test_filters_salted).
-        ex_l, ex_r, join_keys = apply_salt(
-            ex_l, ex_r, build_salt_map(ranks, AUTO_SALT_CAP)
-        )
-        n_part = int(prep_l.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        ex_l = ex_l.repartition(n_part, *join_keys)
-        ex_r = ex_r.repartition(n_part, *join_keys)
-        pairs = ex_l.join(ex_r, join_keys).select("l_id", "r_id").distinct()
+        # one ubiquitous prefix token otherwise serializes the stage
+        # (survivor set identical to the unsalted join —
+        # test_filters_salted)
+        pairs = blocked_candidates(ex_l, ex_r, build_salt_map(ranks, AUTO_SALT_CAP))
         if self.allow_empty:
             el = prep_l.where(F.col("size") == 0).select(F.col("id").alias("l_id"))
             er = prep_r.where(F.col("size") == 0).select(F.col("id").alias("r_id"))

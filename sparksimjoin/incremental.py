@@ -69,7 +69,6 @@ from .joins.core import (
     iid_tag,
     order_tokens,
     prefix_explode,
-    resolve_position_mode,
     resolve_salt_cap,
     verify_pairs,
 )
@@ -341,15 +340,14 @@ def _run_stages(
             )
         salt_map = build_salt_map(tid_freq, resolve_salt_cap(cfg.salt_cap),
                                   key_col="token")
-        mode = resolve_position_mode(cfg.measure, cfg.threshold)
         cand_nn = candidate_pairs(
             ex_new_l, ex_new_r, cfg.measure, cfg.threshold, self_join=True,
-            salt_map=salt_map, position_mode=mode,
+            salt_map=salt_map,
         )
         # disjoint id spaces: no self-pairs and no double orientation
         cand_nb = candidate_pairs(
             ex_new_l, ex_base_r, cfg.measure, cfg.threshold, self_join=False,
-            salt_map=salt_map, position_mode=mode,
+            salt_map=salt_map,
         )
         return cand_nn.unionByName(cand_nb)
 

@@ -728,25 +728,68 @@ def dense_band_pair_stats(
     return int(bp_row[0] or 0), float(lbar)
 
 
-def dense_candidates(
-    prep_l: DataFrame,
-    prep_r: DataFrame,
-    measure: str,
-    threshold: float,
-    self_join: bool = False,
-) -> DataFrame:
-    """All-pairs candidate generation (the dense plan described at
-    :data:`DENSE_ALLPAIRS_CAP`): broadcast nested-loop of the two
-    record frames on the size-band + self-join orientation
-    predicates, in iid space — (l_id, r_id), each unordered pair
-    exactly once, no exchange anywhere.
+def dense_gate(
+    rec_l: DataFrame,
+    rec_r: DataFrame,
+    ex_l: DataFrame,
+    ex_r: DataFrame,
+    size_band: tuple[str, float] | None = None,
+    est: int | None = None,
+) -> bool:
+    """Dense (True) or blocked (False) candidate generation — the one
+    place the set-sim, TF-IDF and weighted joins make this choice.
+    ``rec_l``/``rec_r`` are the record frames (counted once each; the
+    SAME frame object means one shared side, counted and probed once),
+    ``ex_l``/``ex_r`` the exploded prefix frames the blocked path
+    would join. ``est`` passes in a :func:`prefix_meeting_estimate`
+    the caller already ran (the ``candidate_budget`` pre-flight) so
+    the probe runs at most once per join.
 
-    Equivalence contract with :func:`candidate_pairs` + verification:
-    the output is a SUPERSET of the blocked candidates (blocking is
-    sound, so qualifying pairs survive both), and exact verification
-    maps both sets to the identical result. Records with empty token
-    sets are excluded exactly as the prefix explode excludes them
-    (the ``allow_empty`` branch alone emits empty-empty pairs).
+    Dense fires unconditionally when the exact meeting volume reaches
+    n_l*n_r (the blocked join's own output alone then costs more than
+    every dense predicate eval). ``size_band=(measure, threshold)``
+    (the set-sim joins) also opens the priced marginal window
+    (:data:`DENSE_MEET_COST_RATIO` carries the rule and its anchors).
+    TF-IDF and the weighted joins pass no band and keep the
+    unconditional gate: TF-IDF cosine is scale-invariant, so no band
+    prunes its dense loop and the dense verify volume IS n_l*n_r,
+    which the window rule would only admit past est >= n^2*L/RATIO —
+    stricter than the unconditional gate at realistic token counts;
+    the weighted W-band prunes on total weight, whose histogram is
+    corpus-sized rather than bounded by record length. Both bench
+    corpora sit far inside the unconditional gate anyway (est/n^2 =
+    5.2 TF-IDF, 3.1 weighted)."""
+    same = rec_r is rec_l
+    n_l = rec_l.count()
+    n_r = n_l if same else rec_r.count()
+    if not 0 < max(n_l, n_r) <= DENSE_ALLPAIRS_CAP:
+        return False
+    if est is None:
+        est = prefix_meeting_estimate(ex_l, ex_r, same=same)
+    if est >= n_l * n_r:
+        return True
+    if size_band is None or est * DENSE_MEETING_FACTOR < n_l * n_r:
+        return False
+    # marginal window: two histogram-sized jobs price the dense path's
+    # full verify volume against the meeting rows the BNL saves
+    bp, lbar = dense_band_pair_stats(rec_l, rec_r, *size_band, same=same)
+    return bp * lbar <= DENSE_MEET_COST_RATIO * est
+
+
+def dense_candidates(l: DataFrame, r: DataFrame, residual: Column) -> DataFrame:
+    """All-pairs candidate generation (the dense plan :func:`dense_gate`
+    picks): broadcast nested-loop of two already-projected record
+    frames — ``l`` carries ``l_id``, ``r`` carries ``r_id``, plus
+    whatever ``residual`` reads (the set-sim size band, the weighted
+    W-band, the self-join orientation) — -> (l_id, r_id), each pair at
+    most once, no exchange beyond the one below.
+
+    Equivalence contract with the blocked path + verification: the
+    output is a SUPERSET of the blocked candidates (blocking is sound,
+    so qualifying pairs survive both), and exact verification maps
+    both sets to the identical result. Callers drop records with
+    empty token sets exactly as the prefix explode drops them (the
+    ``allow_empty`` branch alone emits empty-empty pairs).
 
     The streamed (left) side is explicitly hash-repartitioned to the
     session parallelism: it comes off a cached record frame whose
@@ -754,20 +797,14 @@ def dense_candidates(
     tiny), and BNL parallelism == streamed-side partitions — so the
     whole fused candidate+verify stage would otherwise run serially
     (measured: a 1-task 38 exec-s stage on the weighted twin of this
-    path). One exchange of the row-capped (<= DENSE_ALLPAIRS_CAP)
-    frame buys full parallelism for the n_l*n_r-cell loop."""
-    n_part = int(prep_l.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    l = prep_l.where(F.col("size") > 0).select(
-        F.col("iid").alias("l_id"), F.col("size").alias("l_size")
-    ).repartition(n_part, "l_id")
-    r = prep_r.where(F.col("size") > 0).select(
-        F.col("iid").alias("r_id"), F.col("size").alias("r_size")
+    path; 32 tasks after). One exchange of the row-capped left frame
+    buys full parallelism for the n_l*n_r-cell loop."""
+    n_part = int(l.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        l.repartition(n_part, "l_id")
+        .join(F.broadcast(r), residual, "inner")
+        .select("l_id", "r_id")
     )
-    lo, hi = size_bounds_expr(F.col("l_size"), measure, threshold)
-    cond = F.col("r_size").between(lo, hi)
-    if self_join:
-        cond = cond & (F.col("l_id") < F.col("r_id"))
-    return l.join(F.broadcast(r), cond, "inner").select("l_id", "r_id")
 
 
 # default hot-token split threshold: an unsplit join cell is at most
@@ -841,37 +878,83 @@ def apply_salt(
     return ex_l, ex_r, ["token", "salt"]
 
 
-def resolve_position_mode(measure: str, threshold: float) -> str:
-    """Choose between the occurrence-level and accumulated (PPJoin)
-    position bounds. Default: OCCURRENCE for every measure.
+def salted_join(
+    ex_l: DataFrame, ex_r: DataFrame, salt_map: DataFrame | None
+) -> DataFrame:
+    """Equi-join two exploded blocking-key frames (``token`` plus
+    ``l_id``/``r_id`` and any carried columns) on the key after
+    :func:`apply_salt` — the salt-then-pin step every blocked join
+    here shares.
 
-    History, because this flag has now flipped twice and only the
-    quiet-host measurement should be trusted: a mid-round-4 A/B taken
-    in a heavily contended window (identical cells spread 6x;
-    BENCH/BASELINE.md 09:57 entry) concluded aggregate wins at every
-    threshold and flipped the default. Re-measured on a quiet host
-    (full pipeline, 24k transcripts, fresh JVM per cell, BENCH/
-    BASELINE.md round-4 retraction entry) the conclusion inverted at
-    BOTH thresholds and BOTH core counts: occurrence 297s vs
-    aggregate 665s at t=0.6/8 cores, 51s vs 192s at t=0.8/8 cores,
-    with the same shape at 32 cores. The aggregate mode's tighter
-    bound does cut candidates (40.2M->23.2M at t=0.6) but its
-    pair-grouping shuffle of the full meeting stream inside the
-    candidates stage (573s vs 161s at t=0.6; 116s vs 11s at t=0.8)
-    costs several times more than the verify-stage savings. The
-    documents corpus (31-word vocab, t=0.95) agreed: occurrence 8.9s
-    vs aggregate 11.8s min-of-3. Aggregate stays available via the
-    ``position_mode`` parameter (joins) / ``PipelineConfig.
-    position_mode`` for workloads whose verify step is far more
-    expensive per pair (e.g. long arrays, costly user scorers).
+    Both inputs are explicitly repartitioned to the session
+    parallelism on the join keys: exploded rows are NARROW (tens of
+    bytes), so AQE's byte-based coalescing collapses the
+    planner-inserted join exchanges to a handful of tasks — and the
+    join's OUTPUT expansion (posting-list × posting-list, often 10x+
+    the input bytes) plus the residual predicates and map-side pair
+    dedup then run nearly serially. An explicit numbered repartition
+    on the join keys is reused by EnsureRequirements and is exempt
+    from AQE coalescing (REPARTITION_BY_NUM), keeping the expansion at
+    full parallelism — observed as the set-sim candidates stage
+    pinning at ~45s regardless of 8 vs 32 cores, a 2-task 27 exec-s
+    TF-IDF candidate stage and a 1-task 12.6 exec-s weighted one
+    before this. The pin also opts out of AQE's skew-join splitting,
+    which is why the salt is mandatory (:data:`AUTO_SALT_CAP`)."""
+    n_part = int(ex_l.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    ex_l, ex_r, join_keys = apply_salt(ex_l, ex_r, salt_map)
+    ex_l, ex_r = (ex.repartition(n_part, *join_keys) for ex in (ex_l, ex_r))
+    return ex_l.join(ex_r, join_keys)
 
-    EDIT_DISTANCE must stay on occurrence for SOUNDNESS regardless:
-    the accumulated bound assumes set semantics (one join row per
-    shared token) and edit distance is bag-tokenized. OVERLAP /
-    OVERLAP_COEFFICIENT likewise: their full/near-full prefixes would
-    make aggregate group the entire unfiltered inverted-index join
-    stream (measured GC meltdown on the 48k-row Zipf corpus)."""
-    return "occurrence"
+
+def blocked_candidates(
+    ex_l: DataFrame,
+    ex_r: DataFrame,
+    salt_map: DataFrame | None,
+    residual: Column | None = None,
+) -> DataFrame:
+    """Distinct (l_id, r_id) pairs that meet in :func:`salted_join` and
+    pass ``residual``. Each pair meets at least once whatever the salt
+    (its left row lands in one bucket, its right rows in all), and
+    distinct() collapses multiplicity — the output equals the unsalted
+    join's (property-tested)."""
+    joined = salted_join(ex_l, ex_r, salt_map)
+    if residual is not None:
+        joined = joined.where(residual)
+    # distinct() keeps its planner shape: the partial (map-side) dedup
+    # runs inside the join stage at the parallelism fixed above, and
+    # the final agg over already-deduped pairs is cheap even when AQE
+    # coalesces it; CPU-heavy consumers (verify, levenshtein)
+    # re-spread explicitly on the pair key themselves
+    return joined.select("l_id", "r_id").distinct()
+
+
+def record_candidates(
+    rec_l: DataFrame,
+    rec_r: DataFrame,
+    ranks: DataFrame,
+    salt_cap: int,
+    residual: Column,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Candidate (l_id, r_id) pairs for the TF-IDF and weighted joins,
+    whose record frames carry ``id``, a ``prefix`` array of int tids
+    and the ``carry`` columns that ``residual`` reads as
+    ``l_<col>``/``r_<col>``. :func:`dense_gate` picks the path; the
+    blocked one salts the prefix tids by their ``ranks`` frequency.
+    The dense loop evaluates the SAME residual the blocked join
+    applies, so the two candidate sets differ only by the dropped
+    prefix blocking and exact verification maps both to the identical
+    result."""
+
+    def side(rec: DataFrame, s: str, *extra: Column) -> DataFrame:
+        cols = [F.col(c).alias(f"{s}_{c}") for c in carry]
+        return rec.select(F.col("id").alias(f"{s}_id"), *cols, *extra)
+
+    ex_l = side(rec_l, "l", F.explode("prefix").alias("token"))
+    ex_r = side(rec_r, "r", F.explode("prefix").alias("token"))
+    if dense_gate(rec_l, rec_r, ex_l, ex_r):
+        return dense_candidates(side(rec_l, "l"), side(rec_r, "r"), residual)
+    return blocked_candidates(ex_l, ex_r, build_salt_map(ranks, salt_cap), residual)
 
 
 def candidate_pairs(
@@ -884,66 +967,19 @@ def candidate_pairs(
     salt_map: DataFrame | None = None,
     extra_predicate: Column | None = None,
     position_filter: bool = True,
-    position_mode: str = "occurrence",
 ) -> DataFrame:
-    """Equi-join the exploded prefixes on token (+ optional salt),
-    apply size-bound and position-bound residual predicates, and
-    project distinct (l_id, r_id).
+    """Blocked candidate generation for the prefix-filtered measures:
+    the exploded prefixes meet in :func:`blocked_candidates` on token
+    (+ optional salt) under the size-bound and position-bound residual
+    predicates. -> distinct (l_id, r_id).
 
-    The join inputs are explicitly repartitioned to the session
-    parallelism: exploded prefix rows are NARROW (tens of bytes), so
-    AQE's byte-based coalescing collapses the planner-inserted join
-    exchanges to a handful of tasks — and the join's OUTPUT expansion
-    (posting-list × posting-list, often 10x+ the input bytes) plus the
-    residual predicates and map-side pair dedup then run nearly
-    serially. An explicit numbered repartition on the join keys is
-    reused by EnsureRequirements and is exempt from AQE coalescing
-    (REPARTITION_BY_NUM), keeping the expansion at full parallelism —
-    observed as the candidates stage pinning at ~45s regardless of
-    8 vs 32 cores before this.
-
-    ``position_mode`` selects how the PPJoin position bound is applied:
-
-    - ``"occurrence"`` (filters' documented semantics): a pair
-      survives if ANY shared prefix-token occurrence satisfies
-      ``1 + min(s1 - lpos, s2 - rpos) >= req``; pairs are then
-      ``distinct()``-ed.
-    - ``"aggregate"`` (the joins' candidate path): the shared
-      prefix-token occurrences of each pair are accumulated —
-      ``o_p = |shared prefix tokens|`` with the min/max matching
-      positions — and the pair survives only if BOTH upper bounds on
-      the total overlap reach ``req``::
-
-          o_p + min(s1 - lp_max, s2 - rp_max) >= req
-          1   + min(s1 - lp_min, s2 - rp_min) >= req
-
-      Losslessness: both token arrays are sorted in the same global
-      order, so the shared prefix tokens appear in the same relative
-      order on both sides (max/min positions belong to the same
-      token), and any common token ranked below the last shared
-      prefix token necessarily lies inside BOTH prefixes (hence is
-      counted in o_p); tokens above it number at most
-      ``min(s1 - lp_max, s2 - rp_max)``. Set-semantics only (each
-      shared token contributes exactly one join row) — bag-tokenized
-      edit distance stays on ``"occurrence"``.
-
-      This is the classic PPJoin accumulated bound and it is the big
-      candidate-volume lever: on the 2,000-word transcripts workload
-      the occurrence bound passes ~9.7M pairs into exact verification
-      of which only ~3.8k survive; the accumulated bound removes most
-      of that gap before the expensive stage.
-    """
-    spark = ex_l.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert position_mode in ("occurrence", "aggregate"), position_mode
-    ex_l, ex_r, join_keys = apply_salt(ex_l, ex_r, salt_map)
-    ex_l = ex_l.repartition(n_part, *join_keys)
-    ex_r = ex_r.repartition(n_part, *join_keys)
-
+    The position bound is the occurrence-level PPJoin bound (the
+    filters' documented semantics): a pair survives if ANY shared
+    prefix-token occurrence satisfies
+    ``1 + min(s1 - lpos, s2 - rpos) >= req``."""
     lo, hi = size_bounds_expr(F.col("l_size"), measure, threshold)
     cond = F.col("r_size").between(lo, hi)
-    use_agg = position_filter and position_mode == "aggregate"
-    if position_filter and not use_agg:
+    if position_filter:
         req = overlap_threshold_expr(F.col("l_size"), F.col("r_size"), measure, threshold, qval)
         bound = 1 + F.least(
             F.col("l_size") - F.col("l_pos"), F.col("r_size") - F.col("r_pos")
@@ -953,34 +989,7 @@ def candidate_pairs(
         cond = cond & (F.col("l_id") < F.col("r_id"))
     if extra_predicate is not None:
         cond = cond & extra_predicate
-    joined = ex_l.join(ex_r, join_keys).where(cond)
-    if use_agg:
-        agg = joined.groupBy("l_id", "r_id").agg(
-            F.count(F.lit(1)).alias("_op"),
-            F.min("l_pos").alias("_lpmin"),
-            F.min("r_pos").alias("_rpmin"),
-            F.max("l_pos").alias("_lpmax"),
-            F.max("r_pos").alias("_rpmax"),
-            F.max("l_size").alias("_s1"),
-            F.max("r_size").alias("_s2"),
-        )
-        req = overlap_threshold_expr(F.col("_s1"), F.col("_s2"), measure, threshold, qval)
-        ub_last = F.col("_op") + F.least(
-            F.col("_s1") - F.col("_lpmax"), F.col("_s2") - F.col("_rpmax")
-        )
-        ub_first = 1 + F.least(
-            F.col("_s1") - F.col("_lpmin"), F.col("_s2") - F.col("_rpmin")
-        )
-        return (
-            agg.where((ub_last.cast("double") >= req) & (ub_first.cast("double") >= req))
-            .select("l_id", "r_id")
-        )
-    # distinct() keeps its planner shape: the partial (map-side) dedup
-    # runs inside the join stage at the parallelism fixed above, and
-    # the final agg over already-deduped pairs is cheap even when AQE
-    # coalesces it; CPU-heavy consumers (verify, levenshtein)
-    # re-spread explicitly on the pair key themselves
-    return joined.select("l_id", "r_id").distinct()
+    return blocked_candidates(ex_l, ex_r, salt_map, cond)
 
 
 def verify_pairs(

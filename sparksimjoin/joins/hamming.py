@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from ..filter_math import COMP_OP_MAP, EDIT_DISTANCE
 from ..validation import validate_join_inputs
 from .core import (
-    apply_salt,
+    blocked_candidates,
     build_salt_map,
     diagonal_pairs,
     expand_gid_pairs,
@@ -133,17 +133,8 @@ def hamming_join(
     counts = ex_l.select("token") if same else ex_l.select("token").unionAll(ex_r.select("token"))
     freq = counts.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     salt_map = build_salt_map(freq, resolve_salt_cap(salt_cap), key_col="token")
-    ex_l, ex_r, join_keys = apply_salt(ex_l, ex_r, salt_map)
-    spark = l_df.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cond = F.col("l_id") < F.col("r_id") if self_join else F.lit(True)
-    cand = (
-        ex_l.repartition(n_part, *join_keys)
-        .join(ex_r.repartition(n_part, *join_keys), join_keys)
-        .where(cond)
-        .select("l_id", "r_id")
-        .distinct()
-    )
+    cand = blocked_candidates(ex_l, ex_r, salt_map, cond)
 
     # verify: JVM char compare (no UDF); length equality is implied by
     # the blocking key but asserted again here for clarity/cheapness
@@ -153,6 +144,7 @@ def hamming_join(
     r_str = vr.where(F.col(vra).isNotNull()).select(
         F.col(vrk).alias("r_id"), F.col(vra).alias("_rs")
     )
+    n_part = int(l_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     ham = F.aggregate(
         F.zip_with(
             F.split(F.col("_ls"), ""), F.split(F.col("_rs"), ""),

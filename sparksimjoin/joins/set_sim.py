@@ -31,10 +31,13 @@ from ..validation import (
     validate_join_inputs,
     validate_threshold,
 )
+from . import core
 from .core import (
     build_salt_map,
     candidate_pairs,
     canonical_set_key,
+    dense_candidates,
+    dense_gate,
     diagonal_pairs,
     empty_pairs,
     expand_gid_pairs,
@@ -43,10 +46,18 @@ from .core import (
     prepare_sides,
     project_output,
     resolve_dedup,
-    resolve_position_mode,
+    resolve_salt_cap,
     string_dedup_maps,
     verify_pairs,
 )
+
+
+def _sized_ids(prep: DataFrame, side: str) -> DataFrame:
+    """({side}_id, {side}_size) in iid space, token-less records dropped
+    (the dense candidate input; the prefix explode drops them too)."""
+    return prep.where(F.col("size") > 0).select(
+        F.col("iid").alias(f"{side}_id"), F.col("size").alias(f"{side}_size")
+    )
 
 
 def set_sim_join(
@@ -74,7 +85,6 @@ def set_sim_join(
     salt_cap: int | None = None,
     dense_id: bool = False,
     position_filter: bool = True,
-    position_mode: str | None = None,
     dedup_strings: bool | str = "auto",
     stop_token_cap: int | None = None,
     candidate_budget: int | None = None,
@@ -159,42 +169,21 @@ def set_sim_join(
             metrics_out["dropped_stop_tokens"] = LazyObservedMetric(
                 obs, "dropped_stop_tokens"
             )
-    # cost-based dense path (joins/core.DENSE_ALLPAIRS_CAP): when the
-    # EXACT meeting volume of the blocked equi-join (vocabulary-sized
-    # probe over the exploded prefixes) reaches n_l*n_r /
-    # DENSE_MEETING_FACTOR, all-pairs broadcast nested-loop beats the
-    # blocked join's own output (each meeting row costs more than a
-    # BNL predicate eval — factor rationale at the constant) and needs
-    # zero shuffles. Candidate sets differ
-    # (dense is a superset) but exact verification maps both to the
-    # identical result; disabled under the LOSSY stop_token_cap
-    # (whose candidate drop is part of the declared semantics) and for
-    # non-monotone comp_ops (the blocked candidate set IS the
-    # semantics there — verify keeps low scores).
-    from .core import (
-        DENSE_ALLPAIRS_CAP,
-        DENSE_MEET_COST_RATIO,
-        DENSE_MEETING_FACTOR,
-        dense_band_pair_stats,
-        dense_candidates,
-        prefix_meeting_estimate,
-        resolve_salt_cap,
-    )
-
     # pre-flight candidate-volume guard (round-5 verdict item 4, the
     # OVERLAP_COEFFICIENT quadratic-blow-up defense): when a budget is
     # set, the EXACT meeting volume of the blocked candidate join is
     # priced with the vocabulary-sized probe BEFORE anything pairwise
     # runs, and a breach raises with the numbers instead of launching
     # a runaway join. Off by default (None): the probe then only runs
-    # when the dense-path gate wants it.
+    # when the dense-path gate wants it, and reuses this estimate.
+    est = None
     if candidate_budget is not None:
         if candidate_budget <= 0:
             raise ValueError(f"candidate_budget must be > 0, got {candidate_budget}")
-        est_guard = prefix_meeting_estimate(ex_l, ex_r, same=prep_r is prep_l)
-        if est_guard > candidate_budget:
+        est = core.prefix_meeting_estimate(ex_l, ex_r, same=prep_r is prep_l)
+        if est > candidate_budget:
             raise ValueError(
-                f"projected candidate meeting volume {est_guard:,} exceeds "
+                f"projected candidate meeting volume {est:,} exceeds "
                 f"candidate_budget {candidate_budget:,} for measure {measure} "
                 f"at threshold {threshold}. Price a lossy stop-token cap "
                 "first: estimate_join_cost(..., stop_token_cap=N) reports the "
@@ -209,41 +198,31 @@ def set_sim_join(
     # loudly (the falsy-coercion contract test)
     resolved_salt_cap = resolve_salt_cap(salt_cap)
 
-    use_dense = False
-    if stop_token_cap is None and comp_op in (">=", ">"):
-        n_l = prep_l.count()
-        n_r = n_l if prep_r is prep_l else prep_r.count()
-        if 0 < max(n_l, n_r) <= DENSE_ALLPAIRS_CAP:
-            est = prefix_meeting_estimate(ex_l, ex_r, same=prep_r is prep_l)
-            use_dense = est >= n_l * n_r
-            if not use_dense and est * DENSE_MEETING_FACTOR >= n_l * n_r:
-                # marginal window (core.DENSE_MEET_COST_RATIO has the
-                # cost model + calibration anchors): price the dense
-                # path's full verify volume — exact size-band pair
-                # count x mean token count, two histogram-sized jobs —
-                # against the meeting rows the BNL saves
-                bp, lbar = dense_band_pair_stats(
-                    prep_l, prep_r, measure, threshold,
-                    same=prep_r is prep_l,
-                )
-                use_dense = bp * lbar <= DENSE_MEET_COST_RATIO * est
+    # the dense path (core.dense_gate) is off under the LOSSY
+    # stop_token_cap (whose candidate drop is part of the declared
+    # semantics) and for non-monotone comp_ops (the blocked candidate
+    # set IS the semantics there — verify keeps low scores)
+    use_dense = (
+        stop_token_cap is None and comp_op in (">=", ">")
+        and dense_gate(prep_l, prep_r, ex_l, ex_r,
+                       size_band=(measure, threshold), est=est)
+    )
     if use_dense:
-        cand = dense_candidates(prep_l, prep_r, measure, threshold,
-                                self_join=self_join)
+        lo, hi = fm.size_bounds_expr(F.col("l_size"), measure, threshold)
+        band = F.col("r_size").between(lo, hi)
+        cand = dense_candidates(
+            _sized_ids(prep_l, "l"), _sized_ids(prep_r, "r"),
+            band & (F.col("l_id") < F.col("r_id")) if self_join else band,
+        )
     else:
         # salting is always on (AUTO_SALT_CAP default): the pinned-
         # parallelism candidate join opts out of AQE skew splitting, so
         # hot blocking tokens must be split here (lossless,
         # property-tested); salt_cap overrides the threshold
-        salt_map = build_salt_map(ranks, resolved_salt_cap)
-        # position-bound mode: occurrence by default — the accumulated
-        # bound's tighter candidate set never paid for its pair-grouping
-        # shuffle on any quiet-host measurement (resolve_position_mode
-        # docstring has the numbers and the contaminated-A/B history)
         cand = candidate_pairs(
-            ex_l, ex_r, measure, threshold,
-            self_join=self_join, salt_map=salt_map, position_filter=position_filter,
-            position_mode=position_mode or resolve_position_mode(measure, threshold),
+            ex_l, ex_r, measure, threshold, self_join=self_join,
+            salt_map=build_salt_map(ranks, resolved_salt_cap),
+            position_filter=position_filter,
         )
     # the candidate funnel above ran on dense-long iids (with_iid);
     # verify decodes back to original ids through its prep joins and

@@ -80,12 +80,10 @@ from ..cache import track
 from ..tokenizers import Tokenizer
 from ..validation import validate_join_inputs, validate_threshold
 from .core import (
-    DENSE_ALLPAIRS_CAP,
-    apply_salt,
-    build_salt_map,
     build_token_ranks,
-    prefix_meeting_estimate,
+    record_candidates,
     resolve_salt_cap,
+    tokenize_table,
 )
 
 #: weight quantization: w = (N * TFIDF_SCALE) DIV df. 10³ (not
@@ -94,14 +92,6 @@ from .core import (
 TFIDF_SCALE = 1_000
 
 _DEC = "DECIMAL(38,0)"
-
-
-def _bag_side(df: DataFrame, key: str, attr: str, tok: Tokenizer) -> DataFrame:
-    return (
-        df.where(F.col(attr).isNotNull())
-        .select(F.col(key).alias("id"), tok.spark_expr(F.col(attr)).alias("toks"))
-        .where(F.size("toks") > 0)
-    )
 
 
 def _rec_frame(bag_df: DataFrame, wtab: DataFrame, threshold: float,
@@ -204,8 +194,9 @@ def tfidf_join(
     cap = resolve_salt_cap(salt_cap)
     bag_tok = tokenizer.with_return_set(False)
 
-    l_bag = _bag_side(l_df, l_key_attr, l_join_attr, bag_tok)
-    r_bag = l_bag if self_join else _bag_side(r_df, r_key_attr, r_join_attr, bag_tok)
+    l_bag = tokenize_table(l_df, l_key_attr, l_join_attr, bag_tok).where(F.size("toks") > 0)
+    r_bag = l_bag if self_join else (
+        tokenize_table(r_df, r_key_attr, r_join_attr, bag_tok).where(F.size("toks") > 0))
 
     # df over DISTINCT tokens per record (document frequency), shared
     # across both sides; ranks feed the weight table AND the salt map
@@ -235,62 +226,8 @@ def tfidf_join(
     rec_r = rec_l if self_join else track(
         _rec_frame(r_bag, wtab, threshold, dampen))
 
-    ex_l = rec_l.select(F.col("id").alias("l_id"), F.explode("prefix").alias("token"))
-    ex_r = rec_r.select(F.col("id").alias("r_id"), F.explode("prefix").alias("token"))
-
-    # cost-based dense path (joins/core.DENSE_ALLPAIRS_CAP rationale):
-    # when the exact meeting volume of the blocked prefix equi-join
-    # reaches n_l*n_r, an all-pairs broadcast nested-loop is strictly
-    # less work than the blocked join's own output and fuses candidate
-    # generation + verification into one zero-exchange stage. Exact
-    # verification filters both candidate sets to the identical
-    # result. Cosine is scale-invariant, so there is no size/norm band
-    # to carry — the dense candidate set is the full l<r product; for
-    # the same reason the set-sim gate's priced marginal window
-    # (core.DENSE_MEET_COST_RATIO) does not transfer: with no band to
-    # prune it, the dense verify volume IS n_l*n_r, which the window
-    # rule would only admit past est >= n^2*L/RATIO — stricter than
-    # the unconditional gate at realistic token counts. The bench
-    # corpus sits at est/n^2 = 5.2, far inside the unconditional gate.
-    n_l = rec_l.count()
-    n_r = n_l if self_join else rec_r.count()
-    use_dense = False
-    if 0 < max(n_l, n_r) <= DENSE_ALLPAIRS_CAP:
-        est = prefix_meeting_estimate(ex_l, ex_r, same=self_join)
-        use_dense = est >= n_l * n_r
-
     pair_pred = F.col("l_id") < F.col("r_id") if self_join else F.lit(True)
-    if use_dense:
-        # streamed-side repartition: BNL parallelism == left-side
-        # partitions, and the cached rec frame's terminal groupBy is
-        # AQE-coalesced to 1-2 partitions — without this the fused
-        # candidate+verify stage runs serially (joins/core.
-        # dense_candidates carries the measured evidence)
-        n_part = int(l_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        dl = rec_l.select(F.col("id").alias("l_id")).repartition(n_part, "l_id")
-        dr = rec_r.select(F.col("id").alias("r_id"))
-        cand = dl.join(F.broadcast(dr), pair_pred, "inner")
-    else:
-        salt_map = build_salt_map(ranks, cap, key_col="tid")
-        ex_l, ex_r, join_keys = apply_salt(ex_l, ex_r, salt_map)
-
-        # pin the candidate join's exchanges to the session parallelism
-        # (same rationale as joins/core.candidate_pairs): the exploded
-        # prefix rows are narrow, so AQE's byte-based coalescing
-        # collapses the planner-inserted exchanges to 1-2 tasks and the
-        # join's posting-list x posting-list OUTPUT expansion then runs
-        # serially (measured: a 2-task 27 exec-s candidate stage =
-        # ~13s serial wall of the 22s tfidf bench query)
-        n_part = int(l_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        ex_l = ex_l.repartition(n_part, *join_keys)
-        ex_r = ex_r.repartition(n_part, *join_keys)
-
-        cand = (
-            ex_l.join(ex_r, join_keys)
-            .where(pair_pred)
-            .select("l_id", "r_id")
-            .distinct()
-        )
+    cand = record_candidates(rec_l, rec_r, ranks, cap, pair_pred)
 
     lv = rec_l.select(
         F.col("id").alias("l_id"), F.col("tids").alias("l_tids"),

@@ -62,24 +62,14 @@ from ..cache import track
 from ..tokenizers import Tokenizer
 from ..validation import validate_join_inputs, validate_threshold
 from .core import (
-    DENSE_ALLPAIRS_CAP,
-    apply_salt,
-    build_salt_map,
     build_token_ranks,
-    prefix_meeting_estimate,
+    record_candidates,
     resolve_salt_cap,
+    tokenize_table,
 )
 
 #: weight quantization: w = (N * WEIGHT_SCALE) DIV df
 WEIGHT_SCALE = 1_000_000
-
-
-def _tok_side(df: DataFrame, key: str, attr: str, tok: Tokenizer) -> DataFrame:
-    return (
-        df.where(F.col(attr).isNotNull())
-        .select(F.col(key).alias("id"), tok.spark_expr(F.col(attr)).alias("toks"))
-        .where(F.size("toks") > 0)
-    )
 
 
 def _rec_frame(tok_df: DataFrame, wtab: DataFrame, prefix_frac: float) -> DataFrame:
@@ -133,8 +123,7 @@ def _weighted_join(
     validate_join_inputs(l_df, r_df, l_key_attr, r_key_attr, l_join_attr,
                          r_join_attr, None, None)
     validate_threshold(threshold, "JACCARD")
-    if salt_cap is not None and salt_cap <= 0:
-        raise ValueError(f"salt_cap must be positive (got {salt_cap})")
+    cap = resolve_salt_cap(salt_cap)
     # f: minimum overlap-weight fraction (module docstring step 2).
     # DICE: 2O/(W1+W2) >= t with W2 >= O gives O >= t*W1/(2-t), and
     # 2*min/(min+max) >= t bounds the band at [f*W1, W1/f] with the
@@ -144,8 +133,9 @@ def _weighted_join(
             "DICE": threshold / (2.0 - threshold)}[measure]
     tok = tokenizer.with_return_set(True)
 
-    l_tok = _tok_side(l_df, l_key_attr, l_join_attr, tok)
-    r_tok = l_tok if self_join else _tok_side(r_df, r_key_attr, r_join_attr, tok)
+    l_tok = tokenize_table(l_df, l_key_attr, l_join_attr, tok).where(F.size("toks") > 0)
+    r_tok = l_tok if self_join else (
+        tokenize_table(r_df, r_key_attr, r_join_attr, tok).where(F.size("toks") > 0))
     corpus = [l_tok] if self_join else [l_tok, r_tok]
 
     # persisted: ranks feeds the weight table AND the salt map, and
@@ -169,14 +159,6 @@ def _weighted_join(
     rec_l = track(_rec_frame(l_tok, wtab, frac))
     rec_r = rec_l if self_join else track(_rec_frame(r_tok, wtab, frac))
 
-    ex_l = rec_l.select(
-        F.col("id").alias("l_id"), F.col("tw").alias("l_tw"),
-        F.explode("prefix").alias("token"),
-    )
-    ex_r = rec_r.select(
-        F.col("id").alias("r_id"), F.col("tw").alias("r_tw"),
-        F.explode("prefix").alias("token"),
-    )
     eps = 1e-9
     band = (
         (F.col("r_tw").cast("double")
@@ -185,64 +167,7 @@ def _weighted_join(
            <= F.col("l_tw") / F.lit(frac) * (1.0 + eps))
     )
     pair_pred = F.col("l_id") < F.col("r_id") if self_join else F.lit(True)
-
-    # cost-based dense path (joins/core.DENSE_ALLPAIRS_CAP rationale —
-    # the same unconditional gate as set_sim_join/tfidf_join): when the
-    # exact meeting volume of the blocked prefix equi-join reaches
-    # n_l*n_r, an all-pairs broadcast nested-loop over the record
-    # frames is strictly less work than the blocked join's own output
-    # and fuses candidate generation + verification into one
-    # zero-exchange stage. The dense join evaluates the SAME W-band
-    # predicate the blocked path applies as a residual, so its
-    # candidate set is a superset of the blocked one only through
-    # dropped prefix blocking — exact verification maps both to the
-    # identical result. The set-sim gate's priced marginal window is
-    # not wired here: it needs a size histogram, and the W-band prunes
-    # on total weight, whose histogram is corpus-sized — while the
-    # bench corpus sits at est/n^2 = 3.1, far inside the unconditional
-    # gate anyway.
-    n_l = rec_l.count()
-    n_r = n_l if self_join else rec_r.count()
-    use_dense = False
-    if 0 < max(n_l, n_r) <= DENSE_ALLPAIRS_CAP:
-        est = prefix_meeting_estimate(ex_l, ex_r, same=self_join)
-        use_dense = est >= n_l * n_r
-
-    if use_dense:
-        # streamed-side repartition: BNL parallelism == left-side
-        # partitions, and the cached rec frame's terminal groupBy is
-        # AQE-coalesced to 1-2 partitions — without this the fused
-        # candidate+verify stage ran as ONE task (measured: 1-task
-        # 38 exec-s stage = the whole query serial; 32-task after)
-        n_part = int(l_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        dl = rec_l.select(
-            F.col("id").alias("l_id"), F.col("tw").alias("l_tw")
-        ).repartition(n_part, "l_id")
-        dr = rec_r.select(F.col("id").alias("r_id"), F.col("tw").alias("r_tw"))
-        cand = (
-            dl.join(F.broadcast(dr), band & pair_pred, "inner")
-            .select("l_id", "r_id")
-        )
-    else:
-        salt_map = build_salt_map(ranks, resolve_salt_cap(salt_cap), key_col="tid")
-        ex_l, ex_r, join_keys = apply_salt(ex_l, ex_r, salt_map)
-
-        # pin the candidate join's exchanges to the session parallelism
-        # (same rationale as joins/core.candidate_pairs): narrow
-        # exploded prefix rows get AQE-coalesced to 1-2 tasks and the
-        # join's output expansion runs serially (measured: a 1-task
-        # 12.6 exec-s candidate stage = ~12s serial wall of the 15s
-        # weighted bench query)
-        n_part = int(l_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        ex_l = ex_l.repartition(n_part, *join_keys)
-        ex_r = ex_r.repartition(n_part, *join_keys)
-
-        cand = (
-            ex_l.join(ex_r, join_keys)
-            .where(band & pair_pred)
-            .select("l_id", "r_id")
-            .distinct()
-        )
+    cand = record_candidates(rec_l, rec_r, ranks, cap, band & pair_pred, carry=("tw",))
 
     lv = rec_l.select(
         F.col("id").alias("l_id"), F.col("tids").alias("l_tids"),

@@ -1,14 +1,17 @@
 """Equivalence of the cost-based dense all-pairs candidate path
-(joins/core.dense_candidates + the probes in set_sim_join/tfidf_join)
-with the blocked prefix-filter path — the round-6 optimization's
-correctness contract: candidate sets differ (dense is a superset) but
-exact verification must map both to the IDENTICAL result."""
+(joins/core.dense_candidates, chosen by joins/core.dense_gate for the
+set-sim, TF-IDF and weighted joins) with the blocked prefix-filter
+path — the round-6 optimization's correctness contract: candidate sets
+differ (dense is a superset) but exact verification must map both to
+the IDENTICAL result. Each blocked arm is forced by monkeypatching the
+one gate constant, ``core.DENSE_ALLPAIRS_CAP``, to 0."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+import sparksimjoin.joins.core as core
 from sparksimjoin import (
     WhitespaceTokenizer,
     jaccard_join,
@@ -48,26 +51,18 @@ def _pairs(df):
 
 
 @pytest.mark.parametrize("threshold", [0.5, 0.8])
-def test_dense_vs_blocked_jaccard_identical(spark, threshold):
-    """Force both paths via DENSE_ALLPAIRS_CAP monkey-knob-free A/B:
-    the dense corpus triggers the probe naturally; the blocked arm is
-    obtained by disabling the probe through a stop-gap comp_op-safe
-    route — here, by patching the cap to 0."""
-    import sparksimjoin.joins.core as core
-
+def test_dense_vs_blocked_jaccard_identical(spark, monkeypatch, threshold):
+    """The dense corpus triggers the probe naturally; the blocked arm
+    patches the cap to 0, so the gate can never pick dense."""
     corpus = _dense_corpus(spark)
     dense = jaccard_join(corpus, corpus, "id", "id", "text", "text", WS,
                          threshold, self_join=True, dedup_strings=False)
     got_dense = _pairs(dense.select("l_id", "r_id", "_sim_score"))
 
-    old = core.DENSE_ALLPAIRS_CAP
-    core.DENSE_ALLPAIRS_CAP = 0  # probe can never trigger -> blocked
-    try:
-        blocked = jaccard_join(corpus, corpus, "id", "id", "text", "text", WS,
-                               threshold, self_join=True, dedup_strings=False)
-        got_blocked = _pairs(blocked.select("l_id", "r_id", "_sim_score"))
-    finally:
-        core.DENSE_ALLPAIRS_CAP = old
+    monkeypatch.setattr(core, "DENSE_ALLPAIRS_CAP", 0)
+    blocked = jaccard_join(corpus, corpus, "id", "id", "text", "text", WS,
+                           threshold, self_join=True, dedup_strings=False)
+    got_blocked = _pairs(blocked.select("l_id", "r_id", "_sim_score"))
     assert got_dense == got_blocked
     assert len(got_dense) > 0
 
@@ -91,57 +86,50 @@ def test_dense_probe_actually_fires(spark):
     assert "BroadcastNestedLoopJoin" not in plan_sparse
 
 
-def test_dense_vs_blocked_tversky_asymmetric(spark):
+def test_dense_vs_blocked_tversky_asymmetric(spark, monkeypatch):
     """Asymmetric Tversky self-join (the orientation-sensitive verify)
     through both candidate paths."""
-    import sparksimjoin.joins.core as core
-
     corpus = _dense_corpus(spark)
     kw = dict(alpha=0.7, beta=0.3, self_join=True, allow_empty=False)
     dense = tversky_index_join(corpus, corpus, "id", "id", "text", "text",
                                WS, 0.5, **kw)
     got_dense = _pairs(dense.select("l_id", "r_id", "_sim_score"))
-    old = core.DENSE_ALLPAIRS_CAP
-    core.DENSE_ALLPAIRS_CAP = 0
-    try:
-        blocked = tversky_index_join(corpus, corpus, "id", "id", "text", "text",
-                                     WS, 0.5, **kw)
-        got_blocked = _pairs(blocked.select("l_id", "r_id", "_sim_score"))
-    finally:
-        core.DENSE_ALLPAIRS_CAP = old
+    monkeypatch.setattr(core, "DENSE_ALLPAIRS_CAP", 0)
+    blocked = tversky_index_join(corpus, corpus, "id", "id", "text", "text",
+                                 WS, 0.5, **kw)
+    got_blocked = _pairs(blocked.select("l_id", "r_id", "_sim_score"))
     assert got_dense == got_blocked
     assert len(got_dense) > 0
 
 
-def test_dense_vs_blocked_tfidf(spark):
-    """tfidf_join's own dense probe (and the adaptive BIGINT dot) vs
-    the blocked path with the DECIMAL dot: scores must be
-    bit-identical (both integer-exact)."""
-    import sparksimjoin.joins.core as core
-    import sparksimjoin.joins.tfidf as tfidf_mod
-
+def test_dense_vs_blocked_tfidf(spark, monkeypatch):
+    """tfidf_join's dense path vs its blocked path: scores must be
+    bit-identical (both integer-exact); the dense corpus must actually
+    fire the gate (BNL in the plan)."""
     corpus = _dense_corpus(spark)
     dense = tfidf_join(corpus, corpus, "id", "id", "text", "text", WS, 0.5,
                        self_join=True)
+    plan = dense._jdf.queryExecution().executedPlan().toString()
     got_dense = _pairs(dense)
-    old = core.DENSE_ALLPAIRS_CAP
-    tfidf_mod.DENSE_ALLPAIRS_CAP = 0
-    try:
-        blocked = tfidf_join(corpus, corpus, "id", "id", "text", "text", WS, 0.5,
-                             self_join=True)
-        got_blocked = _pairs(blocked)
-    finally:
-        tfidf_mod.DENSE_ALLPAIRS_CAP = old
+    monkeypatch.setattr(core, "DENSE_ALLPAIRS_CAP", 0)
+    blocked = tfidf_join(corpus, corpus, "id", "id", "text", "text", WS, 0.5,
+                         self_join=True)
+    # the weight table's crossJoin(broadcast(N)) is one BNL in every
+    # tfidf plan; the dense candidate path adds a second
+    assert plan.count("BroadcastNestedLoopJoin") == (
+        blocked._jdf.queryExecution().executedPlan().toString()
+        .count("BroadcastNestedLoopJoin") + 1
+    )
+    got_blocked = _pairs(blocked)
     assert got_dense == got_blocked
     assert len(got_dense) > 0
 
 
-def test_dense_vs_blocked_weighted_jaccard(spark):
-    """_weighted_join's dense probe (round-6 batch 2): the dense arm
+def test_dense_vs_blocked_weighted_jaccard(spark, monkeypatch):
+    """_weighted_join's dense path (round-6 batch 2): the dense arm
     evaluates the same W-band predicate inside the BNL, so both paths
     must verify to the identical exact-integer-weight result; the
-    dense corpus must actually fire the probe (BNL in the plan)."""
-    import sparksimjoin.joins.weighted as wmod
+    dense corpus must actually fire the gate (BNL in the plan)."""
     from sparksimjoin.joins.weighted import weighted_jaccard_join
 
     corpus = _dense_corpus(spark)
@@ -154,20 +142,16 @@ def test_dense_vs_blocked_weighted_jaccard(spark):
         "BroadcastNestedLoopJoin"
     )
     got_dense = _pairs(dense)
-    old = wmod.DENSE_ALLPAIRS_CAP
-    wmod.DENSE_ALLPAIRS_CAP = 0
-    try:
-        blocked = weighted_jaccard_join(corpus, corpus, "id", "id", "text",
-                                        "text", WS, 0.5, self_join=True)
-        n_bnl_blocked = (
-            blocked._jdf.queryExecution().executedPlan().toString().count(
-                "BroadcastNestedLoopJoin"
-            )
+    monkeypatch.setattr(core, "DENSE_ALLPAIRS_CAP", 0)
+    blocked = weighted_jaccard_join(corpus, corpus, "id", "id", "text",
+                                    "text", WS, 0.5, self_join=True)
+    n_bnl_blocked = (
+        blocked._jdf.queryExecution().executedPlan().toString().count(
+            "BroadcastNestedLoopJoin"
         )
-        assert n_bnl_dense == n_bnl_blocked + 1, (n_bnl_dense, n_bnl_blocked)
-        got_blocked = _pairs(blocked)
-    finally:
-        wmod.DENSE_ALLPAIRS_CAP = old
+    )
+    assert n_bnl_dense == n_bnl_blocked + 1, (n_bnl_dense, n_bnl_blocked)
+    got_blocked = _pairs(blocked)
     assert got_dense == got_blocked
     assert len(got_dense) > 0
 
@@ -279,16 +263,42 @@ def test_overlap_coeff_zipf_stays_blocked(spark):
 
 
 def test_dense_not_used_for_lossy_or_nonmonotone(spark):
-    """stop_token_cap (lossy candidate semantics) and comp_op '<='
-    (verify keeps low scores) must keep the blocked path regardless of
-    corpus shape."""
+    """stop_token_cap (lossy candidate semantics) and comp_op '='
+    (non-monotone: the blocked candidate set is the semantics) must
+    keep the blocked path regardless of corpus shape."""
     corpus = _dense_corpus(spark)
-    capped = jaccard_join(corpus, corpus, "id", "id", "text", "text", WS, 0.5,
-                          self_join=True, dedup_strings=False,
-                          allow_empty=False, stop_token_cap=10**9)
-    assert "BroadcastNestedLoopJoin" not in (
-        capped._jdf.queryExecution().executedPlan().toString()
+    for kw in (dict(stop_token_cap=10**9), dict(comp_op="=")):
+        out = jaccard_join(corpus, corpus, "id", "id", "text", "text", WS, 0.5,
+                           self_join=True, dedup_strings=False,
+                           allow_empty=False, **kw)
+        assert "BroadcastNestedLoopJoin" not in (
+            out._jdf.queryExecution().executedPlan().toString()
+        ), kw
+
+
+def test_candidate_budget_probes_once(spark, monkeypatch):
+    """With candidate_budget set, the budget pre-flight and the dense
+    gate share ONE meeting-volume probe, and the result equals the
+    unbudgeted run's."""
+    corpus = _dense_corpus(spark)
+    kw = dict(self_join=True, dedup_strings=False, allow_empty=False)
+    base = _pairs(jaccard_join(corpus, corpus, "id", "id", "text", "text",
+                               WS, 0.5, **kw))
+    calls = []
+    probe = core.prefix_meeting_estimate
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return probe(*args, **kwargs)
+
+    monkeypatch.setattr(core, "prefix_meeting_estimate", counting)
+    budgeted = jaccard_join(corpus, corpus, "id", "id", "text", "text", WS, 0.5,
+                            candidate_budget=10**12, **kw)
+    assert len(calls) == 1
+    assert "BroadcastNestedLoopJoin" in (
+        budgeted._jdf.queryExecution().executedPlan().toString()
     )
+    assert _pairs(budgeted) == base
 
 
 def test_candidate_budget_guard(spark):

@@ -423,14 +423,11 @@ def test_stop_token_cap(spark, tables):
     assert set(lo) <= set(plain)
 
 
-def test_aggregate_position_mode_lossless(spark, tables):
-    """The accumulated (PPJoin) position bound must be a strict
-    refinement: aggregate-mode candidates are a subset of
-    occurrence-mode candidates, and every truly-matching pair
-    survives (the naive-parity suite covers the end product; this
-    pins the containment at the candidate stage)."""
-    from pyspark.sql import functions as F
-
+def test_candidate_pairs_lossless(spark, tables):
+    """Every truly-matching pair survives the blocked candidate stage
+    (size + occurrence position bounds): the naive-parity suite covers
+    the end product; this pins the containment at the candidate
+    stage."""
     from sparksimjoin.joins.core import (
         candidate_pairs,
         prefix_explode,
@@ -448,15 +445,9 @@ def test_aggregate_position_mode_lossless(spark, tables):
     for thr in (0.3, 0.6, 0.8):
         ex_l = prefix_explode(prep_l, "l", "JACCARD", thr)
         ex_r = prefix_explode(prep_r, "r", "JACCARD", thr)
-        occ = {
+        cand = {
             (lmap[r["l_id"]], rmap[r["r_id"]])
             for r in candidate_pairs(ex_l, ex_r, "JACCARD", thr).collect()
-        }
-        agg = {
-            (lmap[r["l_id"]], rmap[r["r_id"]])
-            for r in candidate_pairs(
-                ex_l, ex_r, "JACCARD", thr, position_mode="aggregate"
-            ).collect()
         }
         true_pairs = {
             (lid, rid)
@@ -465,8 +456,7 @@ def test_aggregate_position_mode_lossless(spark, tables):
                 WhitespaceTokenizer(), thr, "JACCARD", allow_empty=False
             )
         }
-        assert agg <= occ, f"thr={thr}: aggregate added pairs"
-        assert true_pairs <= agg, f"thr={thr}: aggregate lost true pairs"
+        assert true_pairs <= cand, f"thr={thr}: candidates lost true pairs"
 
 
 def test_stop_token_cap_construction_runs_no_job(spark, tables):

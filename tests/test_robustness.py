@@ -190,31 +190,6 @@ def test_series_to_str_non_finite():
     assert got[4] is None and got[5] is None
 
 
-def test_resolve_position_mode_guards():
-    """EDIT_DISTANCE is bag-tokenized, so the accumulated (PPJoin)
-    position bound — set-semantics only — must never be selected for
-    it regardless of threshold (round-3 ADVICE: the fractional-prefix
-    branch returned 'aggregate' for small bands)."""
-    from sparksimjoin.filter_math import EDIT_DISTANCE, JACCARD, OVERLAP
-    from sparksimjoin.joins.core import resolve_position_mode
-
-    for t in (0, 1, 2, 5, 12, 30):
-        assert resolve_position_mode(EDIT_DISTANCE, t) == "occurrence"
-    assert resolve_position_mode(OVERLAP, 3) == "occurrence"
-    # full-prefix measure: aggregate would group the whole unfiltered
-    # inverted-index join stream (measured GC meltdown on the skew
-    # corpus) — must stay occurrence
-    from sparksimjoin.filter_math import OVERLAP_COEFFICIENT
-
-    assert resolve_position_mode(OVERLAP_COEFFICIENT, 0.8) == "occurrence"
-    # round-4 quiet-host retraction (BENCH/BASELINE.md): occurrence
-    # wins every measured cell — the aggregate bound must be an
-    # explicit opt-in (position_mode kwarg / PipelineConfig), never
-    # the resolved default
-    assert resolve_position_mode(JACCARD, 0.9) == "occurrence"
-    assert resolve_position_mode(JACCARD, 0.3) == "occurrence"
-
-
 def test_salt_cap_zero_rejected(spark, tiny):
     """salt_cap=0 must raise, not silently coerce to the default (the
     old `salt_cap or AUTO_SALT_CAP` falsy trap): salting is mandatory
